@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Conv, Expression, ExpressionInfo, Literal, Md5, Substring}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,29 +14,15 @@ import graft.functions.{DotProduct, MinHashArrayExpr, MinHashSketchAgg,
   * the whole dedup/similarity toolkit from `spark.sql(...)` without
   * touching the Scala Column API.
   *
-  * Two registration paths, same builders:
-  *  - at session build (the standard public extension-point pattern):
-  *      SparkSession.builder.withExtensions(new GraftExtensions).…
-  *    or config `spark.sql.extensions=graft.GraftExtensions`;
-  *  - on a live session (for sessions built elsewhere — the driver
-  *    harness hands us one): `GraftExtensions.register(spark)`,
-  *    idempotent via createOrReplaceTempFunction.
+  * One registration path: `GraftExtensions.register(spark)` on a live
+  * session — GraftSession.build calls it on every session it builds,
+  * and a session built elsewhere can call it too (idempotent).
   *
   * Sizing arguments (shingle n, sketch k, winnow k/w) must be INTEGER
   * LITERALS — they parameterize codegen'd expression instances, not
   * per-row inputs; a non-literal raises an analysis-time error rather
   * than silently defaulting.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (name, info, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info, builder))
-    }
-    // the library's one custom logical rewrite — see TokenCountRewrite
-    ext.injectOptimizerRule(_ => graft.plans.TokenCountRewrite)
-  }
-}
-
 object GraftExtensions {
 
   private def intLit(fn: String, arg: String, e: Expression): Int = e match {
@@ -53,7 +38,7 @@ object GraftExtensions {
   }
 
   private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getCanonicalName, null, name, usage, "")
+    new ExpressionInfo("graft.GraftExtensions", null, name, usage, "")
 
   private def badArity(fn: String, usage: String): Nothing =
     throw new IllegalArgumentException(s"$fn: expected $usage")
@@ -147,8 +132,8 @@ object GraftExtensions {
       }))
 
   /** Idempotently register every function AND the token-count rewrite on
-    * a live session (`experimental.extraOptimizations` is the public
-    * post-build twin of injectOptimizerRule).
+    * a live session (`experimental.extraOptimizations` holds the rule;
+    * it is added only when absent, so repeated builds keep one copy).
     */
   def register(spark: SparkSession): Unit = {
     functions.foreach { case (name, _, builder) =>

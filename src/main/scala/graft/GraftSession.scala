@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory + table access for the graft engine.
   *
-  * Tuned for the harness's `local[32]` single-JVM mode but written for a
-  * real cluster: AQE on (runtime re-plan, skew-join splitting, partition
-  * coalescing), shuffle partitions sized to the local core count (on a
-  * 1000-executor cluster this would be ~2-3x total cores, set per-job).
+  * Tuned for a single-JVM `local[cores]` session but written for a real
+  * cluster: Spark's default AQE (runtime re-plan, skew-join splitting,
+  * partition coalescing), shuffle partitions sized to the core count (on
+  * a 1000-executor cluster this would be ~2-3x total cores, set per-job).
   */
 object GraftSession {
 
@@ -18,10 +18,9 @@ object GraftSession {
     * local-cluster run silently launches 1 GiB executors no matter what
     * the master string says. Found when the round-15 100x combined run
     * OOM'd executors requested at "8 GiB" whose real -Xmx was 1024M
-    * (worker launch command in /opt/spark/work). Every graft main that
-    * honors SPARK_GRAFT_MASTER passes the parsed value through to
-    * `spark.executor.memory`, making the topology argument mean what it
-    * says.
+    * (worker launch command in the standalone work dir). [[build]]
+    * passes the parsed value through to `spark.executor.memory`, making
+    * the topology argument mean what it says.
     */
   def executorMemoryFor(master: String): Option[String] =
     """^local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]$""".r
@@ -175,56 +174,113 @@ object GraftSession {
     f.delete(); ()
   }
 
-  def build(appName: String = "graft",
-            master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-            shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      // the SQL surface: graft_* functions usable from spark.sql
-      // (sessions built elsewhere call GraftExtensions.register instead)
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // HotSpot refuses to JIT methods over 8000 bytecode bytes
-      // (-XX:+DontCompileHugeMethods is the default), so whole-stage
-      // codegen output beyond that runs INTERPRETED — measured 3-20x
-      // stage slowdowns with multi-minute JIT-queue stalls on this
-      // suite. Capping at 8000 makes Spark fall back to the split
-      // non-wholestage path for oversized stages: full bench went
-      // 109s -> 38s at sf0.1. (Same value Spark's own docs recommend.)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // file-open cost modeled at 1 MB (default 4 MB floors the split
-      // size): synthetic text compresses ~10:1, so a CPU-dense scan of
-      // a small compressed file was planned 2 tasks wide regardless of
-      // its row groups — the only above-linear ratios in the 10x probe
-      // traced to exactly this. 1 MB lets a multi-row-group file split
-      // to its group count; single-row-group files (the sf0.1 harness
-      // layout) are unaffected either way.
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
-      // default generated-class cache holds 100 entries; a multi-query
-      // session churns past that, evicting warm classes so later (or
-      // re-run) queries re-Janino-compile and re-JIT them — one source
-      // of the multi-second per-query run-to-run swings. 1000 entries
-      // keeps every plan of the suite resident (entries are source-text
-      // keyed; memory cost is the generated classes themselves).
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      // localCheckpoint blocks are freed by the ContextCleaner only after
-      // a JVM GC notices the dropped plan references; with a large heap,
-      // GC can lag many queries behind, so checkpointed intermediates
-      // accumulate and executions get slower over a session (measured).
-      // A short periodic-GC interval bounds that drift.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
-      // reader rejects; read it as BIGINT nanos (EventWindows does exact
-      // integral arithmetic on it — doubles would lose precision at 1e18).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  /** Cores a session plans for: SPARK_GRAFT_CPUS, else this machine's. */
+  private def cpus(env: collection.Map[String, String]): Int =
+    env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Bytes on disk of `sfDir`'s events table: the stateful-volume proxy
+    * both derived state rules key off. */
+  private def eventsBytes(sfDir: String): Long = {
+    val evDir = new java.io.File(s"$sfDir/events.parquet")
+    Option(evDir.listFiles)
+      .map(_.filter(_.isFile).map(_.length).sum)
+      .getOrElse(if (evDir.isFile) evDir.length else 0L)
+  }
+
+  /** Every conf a session is built with, resolved from `build`'s
+    * arguments and the deployment env:
+    *  - the shared confs, identical for every entry point;
+    *  - the deployment settings: SPARK_GRAFT_MASTER picks the master
+    *    (e.g. `local-cluster[4,8,4096]` runs four separate executor
+    *    PROCESSES — real closure/aggregate-buffer serialization,
+    *    broadcast transport, reliable-checkpoint recovery; it needs
+    *    SPARK_HOME and SPARK_GRAFT_EXECUTOR_CLASSPATH pointing at the
+    *    compiled classes), SPARK_GRAFT_RELIABLE=true flips the
+    *    Materialize seam to reliable checkpoints, and a local-cluster
+    *    master's executor heap is made explicit ([[executorMemoryFor]]);
+    *  - given an `sfDir`, the two rules derived from its events bytes:
+    *    the state-store provider (SPARK_GRAFT_STATESTORE overrides
+    *    [[autoStateStoreProvider]]) and the streaming state-partition
+    *    count (SPARK_GRAFT_STREAM_STATE_PARTITIONS overrides
+    *    `StreamingOps.sizeStatePartitions`). Without one, Spark's
+    *    on-heap provider and the library's 4 state partitions stand.
+    */
+  private[graft] def settings(master: String, shufflePartitions: Int,
+      sfDir: Option[String],
+      env: collection.Map[String, String] = sys.env): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    // HotSpot refuses to JIT methods over 8000 bytecode bytes
+    // (-XX:+DontCompileHugeMethods is the default), so whole-stage
+    // codegen output beyond that runs INTERPRETED — measured 3-20x
+    // stage slowdowns with multi-minute JIT-queue stalls on this
+    // suite. Capping at 8000 makes Spark fall back to the split
+    // non-wholestage path for oversized stages: full bench went
+    // 109s -> 38s at sf0.1. (Same value Spark's own docs recommend.)
+    "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    // file-open cost modeled at 1 MB (default 4 MB floors the split
+    // size): synthetic text compresses ~10:1, so a CPU-dense scan of
+    // a small compressed file was planned 2 tasks wide regardless of
+    // its row groups — the only above-linear ratios in the 10x probe
+    // traced to exactly this. 1 MB lets a multi-row-group file split
+    // to its group count; single-row-group files (the sf0.1 harness
+    // layout) are unaffected either way.
+    "spark.sql.files.openCostInBytes" -> (1024 * 1024).toString,
+    // default generated-class cache holds 100 entries; a multi-query
+    // session churns past that, evicting warm classes so later (or
+    // re-run) queries re-Janino-compile and re-JIT them — one source
+    // of the multi-second per-query run-to-run swings. 1000 entries
+    // keeps every plan of the suite resident (entries are source-text
+    // keyed; memory cost is the generated classes themselves).
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    // localCheckpoint blocks are freed by the ContextCleaner only after
+    // a JVM GC notices the dropped plan references; with a large heap,
+    // GC can lag many queries behind, so checkpointed intermediates
+    // accumulate and executions get slower over a session (measured).
+    // A short periodic-GC interval bounds that drift.
+    "spark.cleaner.periodicGC.interval" -> "30s",
+    "spark.sql.session.timeZone" -> "UTC",
+    // events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
+    // reader rejects; read it as BIGINT nanos (EventWindows does exact
+    // integral arithmetic on it — doubles would lose precision at 1e18).
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false") ++
+    executorMemoryFor(master).map("spark.executor.memory" -> _) ++
+    env.get("SPARK_GRAFT_EXECUTOR_CLASSPATH").map("spark.executor.extraClassPath" -> _) ++
+    env.get("SPARK_GRAFT_RELIABLE").map("spark.graft.reliableCheckpoint" -> _) ++
+    sfDir.toSeq.flatMap { dir =>
+      val bytes = eventsBytes(dir)
+      Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          env.get("SPARK_GRAFT_STATESTORE").map(stateStoreProviderFor)
+            .getOrElse(autoStateStoreProvider(bytes,
+              executorHeapBytesFor(master), numExecutorsFor(master))),
+        "spark.graft.streamStatePartitions" ->
+          env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS",
+            graft.streaming.StreamingOps.sizeStatePartitions(bytes, cpus(env)).toString))
+    }
+
+  /** The engine's one session factory: every main and the test session
+    * build through here, so what the tests, the profilers and the
+    * design-point runner run is the system Bench times and Verify checks.
+    * `confs` carries extra STATIC confs (they must be set before the
+    * context starts, e.g. `spark.sql.streaming.streamingQueryListeners`).
+    * The `graft_*` SQL functions and the token-count rewrite are
+    * registered on the built session ([[GraftExtensions.register]]), so
+    * every query plans with them, not just those after a `sql_*` query's
+    * own register call (query order would otherwise decide which plans
+    * the rewrite touches).
+    */
+  def build(master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${cpus(sys.env)}]"),
+            shufflePartitions: Int = cpus(sys.env),
+            sfDir: Option[String] = None,
+            confs: Map[String, String] = Map.empty): SparkSession = {
+    val builder = SparkSession.builder().master(master).appName("graft")
+    (settings(master, shufflePartitions, sfDir) ++ confs)
+      .foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.register(spark)
     spark
   }
 

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftExpressionBridge
 
 /** Profiling/diagnostic main (never a bench record): for each named
   * query, captures
@@ -79,22 +79,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "plans/r17"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     Files.createDirectories(Paths.get(outDir))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.build(sfDir = Some(sfDir))
     val census = new JobCensus
     spark.sparkContext.addSparkListener(census)
 
@@ -119,8 +105,8 @@ object PlanDump {
         df.count()
         val tRun = (System.nanoTime() - t1) / 1e9
         Files.writeString(Paths.get(s"$outDir/$n.txt"), plan)
-        // settle async job-end events before reading the census
-        Thread.sleep(50)
+        // deliver every job/stage event the query posted before reading
+        GraftExpressionBridge.drainListenerBus(spark.sparkContext)
         val (nJobs, jobMs, nTasks, shufR, shufW, detail) = census.summary
         println(f"""{"query":"$n","build_sec":$tBuild%.3f,"run_sec":$tRun%.3f,"n_jobs":$nJobs,"job_ms":$jobMs,"n_tasks":$nTasks,"shuf_read":$shufR,"shuf_write":$shufW,"jobs":$detail}""")
         if (sys.env.contains("SPARK_GRAFT_PLANDUMP_STAGES"))

@@ -55,7 +55,7 @@ object SparkEntry {
     * LLM-pipeline extensions). Keys group by module:
     * urlcount_* rel_* ev_* text_* dedup_* sim_* mm_*.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // —— reference parity: O1-O10 (SURVEY.md §2) ——
     "urlcount_topk" -> ((s, dir) =>
       UrlCount.topK(table(s, dir, "documents"), "text", 100)),
@@ -2422,7 +2422,7 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "urlcount_topk" ->
       """SELECT token, count(*)::BIGINT AS cnt
         |FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)

@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftExpressionBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Progress collector for StreamProfile. Registered via the
@@ -14,10 +14,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * the shared buffer.
   */
 class ProfileListener extends StreamingQueryListener {
-  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-    StreamProfile.started.incrementAndGet()
-  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-    StreamProfile.terminated.incrementAndGet()
+  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     import scala.jdk.CollectionConverters._
     val name = Option(e.progress.name).getOrElse(e.progress.id.toString)
@@ -79,28 +77,6 @@ object StreamProfile {
   private val stateStats =
     mutable.Map[String, mutable.Buffer[(Long, Long)]]()
 
-  /** Listener-bus drain barrier (ADVICE r16): progress events are
-    * delivered ASYNCHRONOUSLY, so a rep's trailing events can land after
-    * the next rep's clear — cross-contaminating exactly the per-batch
-    * breakdowns the bimodality mode diagnoses. Every query a rep runs is
-    * stopped synchronously before the rep returns, so its
-    * QueryTerminatedEvent is POSTED by then; the bus is FIFO, so once
-    * every posted termination has been DELIVERED (terminated == started),
-    * all progress events preceding them have been too. Spin on the
-    * counter pair with a bounded wait — a persistent background query
-    * (none in this harness) would otherwise hang the barrier.
-    */
-  private[graft] val started = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val terminated = new java.util.concurrent.atomic.AtomicLong(0)
-  private def drainListenerBus(timeoutMs: Long = 5000): Unit = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    while (terminated.get() < started.get() && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    if (terminated.get() < started.get())
-      System.err.println(s"warning: listener bus not drained after ${timeoutMs}ms " +
-        s"(started=${started.get()}, terminated=${terminated.get()}) — " +
-        "per-rep attribution may bleed")
-  }
   private[graft] def recordState(name: String, memBytes: Long, rows: Long): Unit =
     batches.synchronized {
       stateStats.getOrElseUpdate(name, mutable.Buffer.empty) += ((memBytes, rows))
@@ -108,19 +84,8 @@ object StreamProfile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.streamingQueryListeners", "graft.ProfileListener")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.build(sfDir = Some(sfDir), confs = Map(
+      "spark.sql.streaming.streamingQueryListeners" -> classOf[ProfileListener].getName))
 
     val defaultSlice = Seq(
       "stream_join_outer", "stream_join", "stream_substring", "stream_transitions",
@@ -135,7 +100,7 @@ object StreamProfile {
         "/root/testdata/sf0.001")).count()
       catch { case e: Throwable => System.err.println(s"warmup $n: ${e.getMessage}") }
     }
-    drainListenerBus()
+    GraftExpressionBridge.drainListenerBus(spark.sparkContext)
     batches.synchronized(batches.clear())
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "1").toInt.max(1)
@@ -149,9 +114,12 @@ object StreamProfile {
         val t0 = System.nanoTime()
         queries(n)(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        // all of this rep's queries have stopped; wait for their events
-        // to DELIVER before reading (and before the next rep clears)
-        drainListenerBus()
+        // all of this rep's queries have stopped, so their progress
+        // events are posted; they are delivered ASYNCHRONOUSLY, so wait
+        // for the listener bus to empty before reading (and before the
+        // next rep clears) — a late event would otherwise land in the
+        // next rep's per-batch breakdown (ADVICE r16)
+        GraftExpressionBridge.drainListenerBus(spark.sparkContext)
         val mine = batches.synchronized(batches.values.flatten.toSeq)
         val (stateMemMax, stateRowsMax) = batches.synchronized {
           val all = stateStats.values.flatten

@@ -33,8 +33,8 @@ import graft.functions.TokenCountExpr
   *    empty string (a zero-width separator makes Java's split
   *    segmentation diverge from matcher-gap counting).
   *
-  * Registered session-wide by GraftExtensions (injectOptimizerRule at
-  * build; `spark.experimental.extraOptimizations` on live sessions).
+  * Registered session-wide by GraftExtensions.register (appended to
+  * `spark.experimental.extraOptimizations`; GraftSession.build does it).
   * This is deliberately the library's one custom logical rule: every
   * other operator composes stock Catalyst (SURVEY §4's conclusion), and
   * a rewrite is only worth its maintenance when it removes a measured

@@ -32,7 +32,7 @@ class FaultToleranceSpec extends SparkSpec
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .foreach(_.stop())
-    GraftSession.build("graft-test-ft", "local[4, 2]", shufflePartitions = 4)
+    GraftSession.build("local[4, 2]", shufflePartitions = 4)
   }
 
   override def afterAll(): Unit = {

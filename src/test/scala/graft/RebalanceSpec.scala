@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RebalanceSpec extends AnyFunSuite {
 
-  private lazy val spark = GraftSession.build("rebalance-spec", "local[4]", 8)
+  private lazy val spark = GraftSession.build("local[4]", 8)
 
   test("cpuSpread pins an explicit width where the implicit keyed form is AQE-coalesced") {
     import spark.implicits._

@@ -17,7 +17,7 @@ abstract class SparkSpec extends AnyFunSuite {
   // fault-tolerance suite overrides this with a dedicated local[4, 2]
   // session (maxFailures=2) for the injected-failure path only.
   lazy val spark: SparkSession =
-    GraftSession.build("graft-test", "local[4]", shufflePartitions = 4)
+    GraftSession.build("local[4]", shufflePartitions = 4)
 
   /** A fresh sfDir-shaped temp dir; write tables into it with writeTable. */
   def tempSfDir(): String =

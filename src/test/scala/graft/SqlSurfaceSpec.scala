@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** The SQL surface (GraftExtensions): every graft_* function invocable
   * from spark.sql, equivalent to its Column-API twin, with literal-arg
   * misuse failing loudly. The shared test session is built through
-  * GraftSession.build, so the session-build injection path (rather than
-  * post-hoc registration) is what's under test; `register` idempotency
-  * gets its own case.
+  * GraftSession.build, which registers the surface with
+  * `GraftExtensions.register` — the one registration path, so that path
+  * is what's under test; `register` idempotency gets its own case.
   */
 class SqlSurfaceSpec extends SparkSpec {
 
